@@ -201,10 +201,9 @@ def prepare(workload, seed, run_dir):
             BACKLOG_REORDERED, prefix="b")
         args["corpus"] = corpus
         args["corpus_rows"] = BACKLOG_FILES * BACKLOG_ROWS
-        # Every routing path warms: clean, dirty and reordered files.
-        args["warm_corpus"] = os.path.join(run_dir, "warm_corpus")
-        sensors.generate(args["warm_corpus"], seed, 3, 200, 0.3, 0.3,
-                         prefix="w")
+        # The warm drain runs the corpus itself, so every routing path
+        # and the row-heavy code are compiled before the timed drains.
+        args["warm_corpus"] = corpus
         exp["strict"] = True
     return args, exp
 
