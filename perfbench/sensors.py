@@ -112,17 +112,16 @@ def generate(out_dir, seed, n_files, rows, dirty_frac=0.0, reorder_frac=0.0,
     return manifest
 
 
-def expectations(manifest, strict, metrics=3):
+def expectations(manifest, metrics=3):
     """Routing and sink accounting the pipeline must reproduce.
 
-    Strict mode quarantines every file with a bad row; lenient mode
-    commits each file's valid subset. The aggregate table holds one row
-    per (file, sensor_id, metric) over committed rows.
+    Strict mode quarantines every file with a bad row. The aggregate
+    table holds one row per (file, sensor_id, metric) over committed rows.
     """
     processed, quarantined = set(), set()
     raw_rows = agg_rows = 0
     for m in manifest:
-        if m["valid_rows"] == 0 or (strict and m["bad_rows"] > 0):
+        if m["bad_rows"] > 0:
             quarantined.add(m["name"])
         else:
             processed.add(m["name"])

@@ -10,7 +10,7 @@ import graft.stream.Ingest
 
 /** Drives `Ingest.start` over a prepared directory tree and records
   * each file's last `onBatch` outcome. */
-final class IngestRun(spark: SparkSession, val root: Path, strict: Boolean,
+final class IngestRun(spark: SparkSession, val root: Path,
     trace: Option[Trace]) {
   val data: Path = Files.createDirectories(root.resolve("data"))
   val conf: PipelineConf = PipelineConf(
@@ -19,7 +19,7 @@ final class IngestRun(spark: SparkSession, val root: Path, strict: Boolean,
     quarantineDir = root.resolve("quarantine").toString,
     checkpointDir = root.resolve("checkpoint").toString,
     monitorIntervalSec = 1,
-    strictMode = strict)
+    strictMode = true)
   private val parquet =
     new ParquetSink(root.resolve("raw").toString, root.resolve("agg").toString)
   val sink: Option[TimedSink] = trace.map(new TimedSink(parquet, _))
@@ -87,8 +87,8 @@ object IngestRun {
   /** Copy a corpus into a fresh tree's data/ and drain it as one
     * micro-batch. Returns the run and (start, end) of the drain. */
   def drainCopy(spark: SparkSession, corpus: Path, root: Path,
-      strict: Boolean, trace: Option[Trace]): (IngestRun, Long, Long) = {
-    val run = new IngestRun(spark, root, strict, trace)
+      trace: Option[Trace]): (IngestRun, Long, Long) = {
+    val run = new IngestRun(spark, root, trace)
     csvFiles(corpus).foreach(p => Files.copy(p, run.data.resolve(p.getFileName)))
     run.start()
     val end = try run.drain() finally run.stop()

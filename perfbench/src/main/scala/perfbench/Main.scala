@@ -47,6 +47,20 @@ object Main {
     spark
   }
 
+  /** Process CPU and heap use of one timed unit (pass or drain). The
+    * unit starts after a full collection, so it starts from the live
+    * heap rather than from the garbage of the units before it. */
+  final class UnitMeter {
+    System.gc()
+    HeapWatch.takePeak()
+    private val c0 = cpuNs()
+
+    /** CPU seconds, and the largest heap occupancy after a collection
+      * in MB, since the unit started. */
+    def stop(): (Double, Double) =
+      ((cpuNs() - c0) / 1e9, HeapWatch.takePeak() / (1024.0 * 1024))
+  }
+
   /** Fixed CPU-bound probe: host weather, reported only. */
   @volatile private var calibSink = 0L
   def calibrate(): Double = {
@@ -61,10 +75,17 @@ object Main {
     (System.nanoTime() - t0) / 1e9
   }
 
-  def peakRssMb(): Double =
-    Files.readAllLines(Paths.get("/proc/self/status")).asScala
+  /** Peak resident memory outside the heap, in MB: `VmHWM` less the
+    * committed heap, which `AlwaysPreTouch` keeps resident from the
+    * moment it is committed. */
+  def offHeapPeakMb(): Double = {
+    val hwmKb = Files.readAllLines(Paths.get("/proc/self/status")).asScala
       .find(_.startsWith("VmHWM:"))
-      .map(_.split("\\s+")(1).toDouble / 1024.0).getOrElse(0.0)
+      .map(_.split("\\s+")(1).toDouble).getOrElse(0.0)
+    val mb = hwmKb / 1024 - HeapWatch.maxCommitted / (1024.0 * 1024)
+    System.err.println(f"[perfbench] VmHWM ${hwmKb / 1024}%.1f MB, heap committed ${HeapWatch.maxCommitted / (1024.0 * 1024)}%.1f MB")
+    mb
+  }
 
   def main(argv: Array[String]): Unit = {
     val a = new Args(argv)
@@ -73,6 +94,7 @@ object Main {
     val traced = a.flag("trace")
     val seconds = a.dbl("seconds")
     val result = mutable.LinkedHashMap.empty[String, Any]
+    HeapWatch.install()
 
     val spark = session(cores, work)
     val trace = if (traced) Some(new Trace(spark)) else None
@@ -90,7 +112,7 @@ object Main {
     trace.foreach(_.write(work.resolve("trace.jsonl")))
     result("calib_s") = calibrate()
     System.err.println(s"[perfbench] setup_s ${result("setup_s")} calib_s ${result("calib_s")}")
-    result("peak_rss_mb") = peakRssMb()
+    result("offheap_peak_mb") = offHeapPeakMb()
     Files.writeString(work.resolve("result.json"), Json.value(result.toMap))
     spark.stop()
   }
@@ -102,6 +124,45 @@ trait Workload {
   def warm(): Unit
   def run(seconds: Double): Unit
   def report(): Map[String, Any]
+}
+
+/** Heap occupancy after each collection, from the collectors' JMX
+  * notifications: the largest occupancy since the last `takePeak`, and
+  * the largest committed heap seen over the run. */
+object HeapWatch {
+  import java.lang.management.{ManagementFactory, MemoryType}
+  import javax.management.{Notification, NotificationEmitter}
+  import javax.management.openmbean.CompositeData
+  import com.sun.management.GarbageCollectionNotificationInfo
+
+  private var peak = 0L
+  @volatile var maxCommitted = 0L
+
+  def takePeak(): Long = synchronized { val p = peak; peak = 0L; p }
+
+  private lazy val heapPools: Set[String] =
+    ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getType == MemoryType.HEAP).map(_.getName).toSet
+
+  private def onGc(n: Notification): Unit =
+    if (n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+      val after = GarbageCollectionNotificationInfo
+        .from(n.getUserData.asInstanceOf[CompositeData]).getGcInfo
+        .getMemoryUsageAfterGc.asScala.filter(p => heapPools(p._1)).values
+      synchronized {
+        peak = math.max(peak, after.map(_.getUsed).sum)
+        maxCommitted = math.max(maxCommitted, after.map(_.getCommitted).sum)
+      }
+    }
+
+  def install(): Unit = {
+    maxCommitted = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getCommitted
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.foreach {
+      case e: NotificationEmitter =>
+        e.addNotificationListener((n: Notification, _: AnyRef) => onGc(n), null, null)
+      case _ =>
+    }
+  }
 }
 
 object Stats {

@@ -1,5 +1,6 @@
 package perfbench
 
+import scala.collection.immutable.ListMap
 import scala.collection.mutable
 import org.apache.spark.sql.{Row, SparkSession}
 import graft.SparkEntry
@@ -10,18 +11,17 @@ import graft.SparkEntry
   * timed separately. The seed permutes the query order of every pass.
   */
 object QueryMix {
-  val families: Seq[(String, Seq[String])] = Seq(
-    // One query per family keeps a run's cold check pass short enough
-    // for several timed passes; see README.md.
-    "core" -> Seq("q_agg_metrics"),
-    "dedup" -> Seq("q_dedup_minhash"),
-    "vector" -> Seq("q_sim_ivf"),
-    "text" -> Seq("q_tfidf_top"),
-    "analytics" -> Seq("q_join_salted"))
+  /** family → its query. One query per family keeps a run's cold check
+    * pass short enough for several timed passes; see README.md. */
+  val families: Map[String, String] = ListMap(
+    "core" -> "q_agg_metrics",
+    "dedup" -> "q_dedup_minhash",
+    "vector" -> "q_sim_ivf",
+    "text" -> "q_tfidf_top",
+    "analytics" -> "q_join_salted")
 
-  val familyOf: Map[String, String] =
-    families.flatMap { case (f, qs) => qs.map(_ -> f) }.toMap
-  val queries: Seq[String] = families.flatMap(_._2)
+  val familyOf: Map[String, String] = families.map(_.swap)
+  val queries: Seq[String] = families.values.toSeq
 
   final case class Exec(pass: Int, query: String, family: String,
       buildS: Double, actionS: Double, traced: Boolean,
@@ -67,51 +67,70 @@ object QueryMix {
     new scala.util.Random(seed * 1000003L + pass).shuffle(queries)
 
   /** Timed passes until `seconds` have elapsed, at least one. With a
-    * trace, odd passes are traced and even ones not (at least four
-    * passes), so the run can report the tracing overhead without the
-    * first, coldest pass landing on one side only. */
+    * trace, pass 0 is an untraced extra warm-up that neither side of
+    * the tracing overhead uses; then odd passes are traced and even
+    * ones not (at least five passes, so two of each). */
   def run(spark: SparkSession, dir: String, seed: Long, seconds: Double,
-      trace: Option[Trace]): (Seq[Exec], Map[Int, Double]) = {
+      trace: Option[Trace]): (Seq[Exec], Map[Int, (Double, Double)]) = {
     val out = mutable.ArrayBuffer.empty[Exec]
-    val cpu = mutable.Map.empty[Int, Double]
+    val meters = mutable.Map.empty[Int, (Double, Double)]
     val t0 = System.nanoTime()
     var pass = 0
-    val need = if (trace.isDefined) 4 else 1
+    val need = if (trace.isDefined) Trace.MinUnits else 1
     while (pass < need || (System.nanoTime() - t0) / 1e9 < seconds) {
-      val tr = trace.filter(_ => pass % 2 == 1)
+      val tr = trace.filter(_ => Trace.tracedUnit(pass))
+      val meter = new Main.UnitMeter
       tr.foreach(_.attach())
       val p0 = System.nanoTime()
-      val c0 = Main.cpuNs()
       order(seed, pass).foreach(q => out += runOne(spark, dir, q, pass, tr))
-      cpu(pass) = (Main.cpuNs() - c0) / 1e9
+      meters(pass) = meter.stop()
       tr.foreach { t =>
         t.span("pass", s"pass$pass", p0, System.nanoTime())
         t.detach()
       }
       pass += 1
     }
-    (out.toSeq, cpu.toMap)
+    (out.toSeq, meters.toMap)
   }
 
   /** Order-insensitive fingerprint of a query's result: row count plus
-    * the sum of per-row 64-bit hashes of a canonical rendering in which
-    * floating-point values are rounded to 9 significant digits (the
-    * relative tolerance of the DuckDB oracle compare). */
-  def fingerprint(rows: Array[Row]): String = {
+    * the sum of per-row 64-bit hashes of a canonical rendering with the
+    * columns in name order. `oracle_fingerprints.py` renders DuckDB's
+    * result of the oracle SQL the same way, so the rendering does not
+    * depend on which numeric or timestamp type a side returns. */
+  def fingerprint(columns: Seq[String], rows: Array[Row]): String = {
+    val order = columns.zipWithIndex.sortBy(_._1).map(_._2)
     var sum = 0L
-    rows.foreach(r => sum += hash64(canon(r)))
+    rows.foreach(r => sum += hash64(order.map(i => canon(r.get(i))).mkString("(", ",", ")")))
     s"${rows.length}:${java.lang.Long.toHexString(sum)}"
   }
 
   private val mc = new java.math.MathContext(9)
 
+  /** Integral numbers exactly; others rounded to 9 significant digits
+    * (the relative tolerance of the DuckDB oracle compare) and written
+    * as `<unscaled>e<exponent>`. */
+  private def number(b: java.math.BigDecimal): String =
+    if (b.signum == 0 || b.stripTrailingZeros.scale <= 0) b.toBigInteger.toString
+    else {
+      val r = b.round(mc).stripTrailingZeros
+      s"${r.unscaledValue}e${-r.scale}"
+    }
+
   private[perfbench] def canon(v: Any): String = v match {
     case null => "\u0000"
     case d: Double =>
-      if (d.isNaN || d.isInfinite) d.toString
-      else if (d == 0.0) "0"
-      else new java.math.BigDecimal(d).round(mc).stripTrailingZeros.toString
+      if (d.isNaN || d.isInfinite) d.toString else number(new java.math.BigDecimal(d))
     case f: Float => canon(f.toDouble)
+    case b: java.math.BigDecimal => number(b)
+    case n @ (_: Long | _: Int | _: Short | _: Byte) => n.toString
+    // Timestamps as epoch microseconds, dates as epoch days.
+    case t: java.sql.Timestamp =>
+      "t" + (Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000)
+    case t: java.time.Instant => "t" + (t.getEpochSecond * 1000000L + t.getNano / 1000)
+    case t: java.time.LocalDateTime => canon(t.toInstant(java.time.ZoneOffset.UTC))
+    case d: java.sql.Date => "d" + d.toLocalDate.toEpochDay
+    case d: java.time.LocalDate => "d" + d.toEpochDay
     case r: Row => r.toSeq.map(canon).mkString("(", ",", ")")
     case m: scala.collection.Map[_, _] =>
       m.toSeq.map { case (k, x) => canon(k) + "->" + canon(x) }.sorted
@@ -134,7 +153,8 @@ object QueryMix {
     queries.map { q =>
       val t0 = System.nanoTime()
       val fp = try Trace.tagged(spark, "check") {
-        fingerprint(SparkEntry.queries(q)(spark, dir).collect())
+        val df = SparkEntry.queries(q)(spark, dir)
+        fingerprint(df.schema.fieldNames.toSeq, df.collect())
       } catch {
         case scala.util.control.NonFatal(e) =>
           s"error: ${e.getClass.getSimpleName}: ${e.getMessage}".take(300)

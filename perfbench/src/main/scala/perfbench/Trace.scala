@@ -214,6 +214,12 @@ final class Trace(spark: SparkSession) {
 
 object Trace {
   val SpanKey = "perfbench.span"
+
+  /** A traced run's units (passes or drains): unit 0 is an untraced
+    * extra warm-up that no metric uses, then odd units are traced and
+    * even ones not, at least two of each. */
+  val MinUnits = 5
+  def tracedUnit(i: Int): Boolean = i % 2 == 1
   val Other = "other"
 
   /** `build:<family>:<query>` → family; `sink` and untagged → ingest. */

@@ -97,31 +97,33 @@ object Layers {
     )
   }
 
-  def unit(wallS: Double, cpuS: Double, traced: Boolean): Map[String, Any] =
-    Map("wall_s" -> wallS, "cpu_s" -> cpuS, "traced" -> traced)
+  def unit(wallS: Double, meter: (Double, Double),
+      traced: Boolean): Map[String, Any] =
+    Map("wall_s" -> wallS, "cpu_s" -> meter._1, "heap_mb" -> meter._2,
+      "traced" -> traced)
 }
 
 final class QueryMixWorkload(spark: SparkSession, a: Main.Args,
     trace: Option[Trace]) extends Workload {
   private val cores = a.int("cores")
   private var execs: Seq[QueryMix.Exec] = Nil
-  private var passCpu = Map.empty[Int, Double]
+  private var passMeters = Map.empty[Int, (Double, Double)]
 
   private var fingerprints = Map.empty[String, String]
 
   def warm(): Unit = fingerprints = QueryMix.checkPass(spark, a.str("tables"))
 
   def run(seconds: Double): Unit = {
-    val (e, cpu) = QueryMix.run(spark, a.str("tables"), a.str("seed").toLong,
+    val (e, meters) = QueryMix.run(spark, a.str("tables"), a.str("seed").toLong,
       seconds, trace)
     execs = e
-    passCpu = cpu
+    passMeters = meters
   }
 
   def report(): Map[String, Any] = {
     val passes = execs.groupBy(_.pass).toSeq.sortBy(_._1)
     val units = passes.map { case (p, es) =>
-      Layers.unit(es.map(_.wallS).sum, passCpu(p), es.head.traced)
+      Layers.unit(es.map(_.wallS).sum, passMeters(p), es.head.traced)
     }
     val out = mutable.LinkedHashMap[String, Any](
       "units" -> units,
@@ -137,30 +139,30 @@ final class QueryMixWorkload(spark: SparkSession, a: Main.Args,
 
   private def layers(t: Trace): Map[String, Double] = {
     val traced = execs.filter(_.traced)
-    val untraced = execs.filterNot(_.traced)
+    // The untraced passes after the extra warm-up give the family walls,
+    // a figure independent of the traced build and action spans.
+    val untraced = execs.filter(e => !e.traced && e.pass > 0)
     val per = traced.map(_.pass).distinct.size.toDouble
     val groups = t.countersByGroup
     val jobs = t.allJobs
+    // Sum over queries of each query's median wall.
+    def total(es: Seq[QueryMix.Exec]) =
+      es.groupBy(_.query).values.map(x => Stats.median(x.map(_.wallS))).sum
     val m = mutable.Map.empty[String, Double]
     QueryMix.families.foreach { case (f, _) =>
       val es = traced.filter(_.family == f)
-      val wall = es.map(_.wallS).sum
-      m(s"query_${f}_s") = wall / per
+      m(s"query_${f}_s") = total(untraced.filter(_.family == f))
       m(s"entry.build_s.$f") = es.map(_.buildS).sum / per
       m(s"entry.action_s.$f") = es.map(_.actionS).sum / per
       m(s"entry.build_jobs.$f") = jobs.count(_.span.startsWith(s"build:$f:")) / per
       m(s"entry.action_jobs.$f") = jobs.count(_.span.startsWith(s"action:$f:")) / per
       val k = groups.getOrElse(f, new t.Counters)
-      m ++= Layers.spark(k, wall, cores, per, s".$f")
+      m ++= Layers.spark(k, es.map(_.wallS).sum, cores, per, s".$f")
     }
-    val wall = traced.map(_.wallS).sum
-    m("query_mix_s") = wall / per
+    m("query_mix_s") = total(untraced)
     m ++= Layers.spark(
-      Layers.merge(t, QueryMix.families.flatMap(f => groups.get(f._1))),
-      wall, cores, per, "")
-    // Sum over queries of the per-query median, traced against untraced.
-    def total(es: Seq[QueryMix.Exec]) =
-      es.groupBy(_.query).values.map(x => Stats.median(x.map(_.wallS))).sum
+      Layers.merge(t, QueryMix.families.keys.flatMap(groups.get)),
+      traced.map(_.wallS).sum, cores, per, "")
     m("tracing_overhead") = total(traced) / total(untraced) - 1.0
     m.toMap
   }
@@ -170,32 +172,31 @@ final class BacklogWorkload(spark: SparkSession, a: Main.Args,
     trace: Option[Trace]) extends Workload {
   private val work = a.path("work")
   private val cores = a.int("cores")
-  private final case class Drain(run: IngestRun, start: Long, end: Long,
-      cpuS: Double, traced: Boolean) {
+  private final case class Drain(i: Int, run: IngestRun, start: Long, end: Long,
+      meter: (Double, Double), traced: Boolean) {
     def wallS: Double = (end - start) / 1e9
   }
   private val drains = mutable.ArrayBuffer.empty[Drain]
 
   def warm(): Unit = {
-    val (_, s, e) = IngestRun.drainCopy(spark, a.path("warm_corpus"),
-      work.resolve("warm"), strict = true, None)
+    val (_, s, e) = IngestRun.drainCopy(spark, a.path("corpus"),
+      work.resolve("warm"), None)
     System.err.println(f"[perfbench] warm drain ${(e - s) / 1e9}%.3f s")
   }
 
   /** Drains of the same corpus until `seconds` have elapsed, at least
-    * one. With a trace, odd drains are traced and even ones not (at
-    * least four drains), as in [[QueryMix.run]]. */
+    * one; a traced run alternates as in [[QueryMix.run]]. */
   def run(seconds: Double): Unit = {
     val t0 = System.nanoTime()
-    val need = if (trace.isDefined) 4 else 1
+    val need = if (trace.isDefined) Trace.MinUnits else 1
     var i = 0
     while (i < need || (System.nanoTime() - t0) / 1e9 < seconds) {
-      val tr = trace.filter(_ => i % 2 == 1)
+      val tr = trace.filter(_ => Trace.tracedUnit(i))
+      val meter = new Main.UnitMeter
       tr.foreach(_.attach())
-      val c0 = Main.cpuNs()
       val (run, s, e) = IngestRun.drainCopy(spark, a.path("corpus"),
-        work.resolve(s"drain$i"), strict = true, tr)
-      drains += Drain(run, s, e, (Main.cpuNs() - c0) / 1e9, tr.isDefined)
+        work.resolve(s"drain$i"), tr)
+      drains += Drain(i, run, s, e, meter.stop(), tr.isDefined)
       System.err.println(f"[perfbench] drain $i ${(e - s) / 1e9}%.3f s")
       tr.foreach { t =>
         t.span("drain", s"drain$i", s, e)
@@ -212,7 +213,7 @@ final class BacklogWorkload(spark: SparkSession, a: Main.Args,
         "statuses" -> d.run.delivered.asScala.toMap)
     }
     val out = mutable.LinkedHashMap[String, Any](
-      "units" -> drains.map(d => Layers.unit(d.wallS, d.cpuS, d.traced)),
+      "units" -> drains.map(d => Layers.unit(d.wallS, d.meter, d.traced)),
       "drains" -> checks)
     trace.foreach { t =>
       val traced = drains.filter(_.traced)
@@ -223,10 +224,12 @@ final class BacklogWorkload(spark: SparkSession, a: Main.Args,
       val wall = traced.map(_.wallS).sum
       m ++= Layers.spark(Layers.merge(t, t.countersByGroup
         .filter(_._1 == "ingest").values), wall, cores, per, "")
+      // The untraced drains after the extra warm-up give the rate.
+      val untraced = drains.filter(d => !d.traced && d.i > 0).map(_.wallS).toSeq
       val rows = a.str("corpus_rows").toDouble
-      m("ingest_rows_per_s") = rows / Stats.median(traced.map(_.wallS).toSeq)
-      m("tracing_overhead") = Stats.median(traced.map(_.wallS).toSeq) /
-        Stats.median(drains.filterNot(_.traced).map(_.wallS).toSeq) - 1.0
+      m("ingest_rows_per_s") = rows / Stats.median(untraced)
+      m("tracing_overhead") =
+        Stats.median(traced.map(_.wallS).toSeq) / Stats.median(untraced) - 1.0
       out("layers") = m.toMap
     }
     out.toMap

@@ -4,6 +4,7 @@ Run from the repository root:  python3 -m unittest discover -s perfbench/tests
 """
 import csv
 import datetime
+import decimal
 import hashlib
 import json
 import os
@@ -14,6 +15,7 @@ import unittest
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, os.path.dirname(HERE))
 
+import oracle_fingerprints  # noqa: E402
 import run  # noqa: E402
 import sensors  # noqa: E402
 import tables  # noqa: E402
@@ -105,14 +107,41 @@ class SensorGeneratorTest(unittest.TestCase):
             {"name": "c", "rows": 1, "bad_rows": 1, "valid_rows": 0,
              "groups": 0},
         ]
-        strict = sensors.expectations(m, strict=True)
-        self.assertEqual(strict["processed"], {"a"})
-        self.assertEqual(strict["quarantined"], {"b", "c"})
-        self.assertEqual((strict["raw_rows"], strict["agg_rows"]), (10, 6))
-        lenient = sensors.expectations(m, strict=False)
-        self.assertEqual(lenient["processed"], {"a", "b"})
-        self.assertEqual(lenient["quarantined"], {"c"})
-        self.assertEqual((lenient["raw_rows"], lenient["agg_rows"]), (18, 15))
+        want = sensors.expectations(m)
+        self.assertEqual(want["processed"], {"a"})
+        self.assertEqual(want["quarantined"], {"b", "c"})
+        self.assertEqual((want["raw_rows"], want["agg_rows"]), (10, 6))
+
+
+class OracleCanonTest(unittest.TestCase):
+    """The rendering must match QueryMix.canon in the harness."""
+
+    def test_numbers(self):
+        n = oracle_fingerprints.number
+        self.assertEqual([n(5), n(5.0), n(-0.0), n(1e20)],
+                         ["5", "5", "0", "100000000000000000000"])
+        self.assertEqual([n(0.1), n(2.5), n(-0.000123456789012)],
+                         ["1e-1", "25e-1", "-123456789e-12"])
+        # Nine significant digits, half up, trailing zeros stripped.
+        self.assertEqual(n(123456789.75), "12345679e1")
+        self.assertEqual(n(0.99999999999), "1e0")
+        self.assertEqual(n(decimal.Decimal("12.50")), "125e-1")
+        self.assertEqual(n(float("nan")), "NaN")
+
+    def test_values_and_rows(self):
+        c = oracle_fingerprints.canon
+        self.assertEqual(c(None), "\u0000")
+        self.assertEqual(c(True), "true")
+        self.assertEqual(c(datetime.datetime(1970, 1, 1, 0, 0, 1, 5)),
+                         "t1000005")
+        self.assertEqual(c(datetime.date(1970, 1, 3)), "d2")
+        self.assertEqual(c([1, None, "x"]), "[1,\u0000,x]")
+        self.assertEqual(c({"a": 1.5, "b": "y"}), "(15e-1,y)")
+        fp = oracle_fingerprints.fingerprint
+        # Columns in name order; rows in any order.
+        self.assertEqual(fp(["b", "a"], [(1, 2), (3, 4)]),
+                         fp(["a", "b"], [(4, 3), (2, 1)]))
+        self.assertEqual(fp(["a"], []), "0:0")
 
 
 class TablesTest(unittest.TestCase):
